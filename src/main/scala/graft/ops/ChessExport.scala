@@ -1,6 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 /** Fan-in + publish (SURVEY.md §2 S7-S9, P2, P5, F6-F8; reference:
@@ -25,8 +30,16 @@ import org.apache.spark.sql.functions._
   * file per Hive cell at this scale and O(cells) files at 100 TB, while
   * letting AQE split a mega source-month cell across tasks instead of
   * serializing it into one straggler, with a per-file record cap as the
-  * AQE-independent bound. Dynamic partition overwrite leaves other
-  * partitions in place on incremental re-publish.
+  * AQE-independent bound.
+  *
+  * Two entry points. [[publish]] is the one-shot fan-in of the reference:
+  * union every source, one write, dynamic overwrite of the cells present
+  * in the data. [[publishSource]] is what the incremental pipeline uses:
+  * one source's games replace its whole `DataSource=<key>` subtree (a
+  * static overwrite), so a republished source keeps no cell its new data
+  * lacks and the other sources' files are not read or rewritten;
+  * [[dropOtherSources]] removes the subtrees of sources no longer
+  * published.
   */
 object ChessExport {
 
@@ -54,5 +67,36 @@ object ChessExport {
     // overwrite would wipe the whole outDir on an incremental re-publish
     PartitionedSink.write(combined, Seq("DataSource", "year", "month"),
       outDir, dynamicOverwrite = true)
+  }
+
+  /** One source's enriched games replace its whole `DataSource=<key>`
+    * subtree (the key escaped the way partition discovery unescapes it),
+    * partitioned by `year=/month=` below it: the published tree reads back
+    * exactly as [[publish]]'s layout. */
+  def publishSource(games: DataFrame, key: String, outDir: String): Unit =
+    PartitionedSink.write(exportProjection(games).drop("DataSource"),
+      Seq("year", "month"), s"$outDir/${subtree(key)}")
+
+  /** Deletes every `DataSource=` subtree of a local `outDir` that is not the
+    * subtree of one of `keys`; returns the deleted subtree names. */
+  def dropOtherSources(outDir: String, keys: Seq[String]): Seq[String] = {
+    val keep = keys.map(subtree).toSet
+    val root = Paths.get(outDir)
+    val stale = if (!Files.isDirectory(root)) Nil else {
+      val ls = Files.list(root)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("DataSource=") && !keep(n)).toList.sorted
+      finally ls.close()
+    }
+    stale.foreach(n => deleteTree(root.resolve(n)))
+    stale
+  }
+
+  private def subtree(key: String): String =
+    ExternalCatalogUtils.getPartitionPathString("DataSource", key)
+
+  private def deleteTree(p: Path): Unit = {
+    val s = Files.walk(p)
+    try s.iterator().asScala.toList.reverse.foreach(Files.delete) finally s.close()
   }
 }

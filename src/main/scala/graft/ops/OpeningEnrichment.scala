@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Opening enrichment — the reference's flagship operator (SURVEY.md §2.3
@@ -35,9 +35,8 @@ import org.apache.spark.sql.functions._
   * [[enrich]] keeps the literal contains form only as the 1:1 replay of the
   * reference SQL for the parity proof of the join/argmax shape.
   *
-  * Both forms shuffle exactly once (the argmax groupBy in `enrich`; none at
-  * all in `enrichTrie` — the trie match is a map and the write-back a
-  * broadcastable join of the small matched side).
+  * `enrich` shuffles once (the argmax groupBy); `enrichTrie` not at all —
+  * the trie match is a per-row map that writes its result back in place.
   */
 object OpeningEnrichment {
 
@@ -61,96 +60,44 @@ object OpeningEnrichment {
     writeBack(games, best)
   }
 
-  /** Scale form: broadcast trie, one pass per game, zero shuffle on the fact
-    * side (the matched set is small relative to games and joins back
-    * broadcast under AQE).
+  /** Scale form: the broadcast trie applied as a per-row lookup — one
+    * pass over the games, no join, no shuffle and no second scan of their
+    * input. Only `Opening IS NULL` rows are probed; a match overwrites ECO
+    * and fills Opening, a miss leaves the row untouched (the write-back
+    * rule of [[enrich]]). A per-row map has no state, so the same form
+    * serves streaming frames in any output mode.
     */
   def enrichTrie(games: DataFrame, openings: DataFrame): DataFrame = {
-    val spark = games.sparkSession
-    import spark.implicits._
     val rows = withPly(openings).select("pgn", "opening_ply", "eco", "name")
       .collect()
       .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getString(3)))
-    val trie = OpeningTrie.build(rows.toIndexedSeq)
-    val bc = spark.sparkContext.broadcast(trie)
-    val matched = games.filter(col("Opening").isNull)
-      .select(col("game_id"), col("clean_movetext"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        val t = bc.value
-        it.flatMap { case (id, mt) =>
-          t.longestMatch(mt).map { case (eco, name) => (id, eco, name) }
-        }
-      }
-      .toDF("t_game_id", "m_eco", "m_name")
-    writeBack(games, matched)
+    val bc = games.sparkSession.sparkContext.broadcast(OpeningTrie.build(rows.toIndexedSeq))
+    val lookup = udf((mt: String) => bc.value.longestMatch(mt))
+    games
+      .withColumn("_opening_match", when(col("Opening").isNull, lookup(col("clean_movetext"))))
+      .withColumn("ECO", coalesce(col("_opening_match._1"), col("ECO")))
+      .withColumn("Opening", coalesce(col("Opening"), col("_opening_match._2")))
+      .drop("_opening_match")
   }
 
-  /** Streaming form: rows carry their movetext, the trie is a broadcast —
-    * enrichment becomes a pure per-row map (no join at all), so it runs in
-    * any streaming output mode with zero state. This is the live-ingest
-    * version of the flagship operator: a PGN drop-directory stream
-    * (`readStream.format("pgn")`) → this → `writeStream`.
+  /** Typed streaming form over [[GameLite]] rows: [[enrichTrie]] on the
+    * same columns. A PGN drop-directory stream (`readStream.format("pgn")`)
+    * → this → `writeStream` is the live-ingest version of the flagship
+    * operator.
     */
   final case class GameLite(game_id: Long, clean_movetext: String,
       ECO: String, Opening: String)
 
-  def enrichStream(
-      games: org.apache.spark.sql.Dataset[GameLite],
-      openings: DataFrame): org.apache.spark.sql.Dataset[GameLite] = {
-    val spark = games.sparkSession
-    import spark.implicits._
-    val rows = withPly(openings).select("pgn", "opening_ply", "eco", "name")
-      .collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getString(3)))
-    val bc = spark.sparkContext.broadcast(OpeningTrie.build(rows.toIndexedSeq))
-    games.mapPartitions { it =>
-      val t = bc.value
-      it.map { g =>
-        if (g.Opening != null) g
-        else t.longestMatch(g.clean_movetext) match {
-          case Some((eco, name)) => g.copy(ECO = eco, Opening = name)
-          case None => g
-        }
-      }
-    }
-  }
+  def enrichStream(games: Dataset[GameLite], openings: DataFrame): Dataset[GameLite] =
+    enrichTrie(games.toDF(), openings).as(Encoders.product[GameLite])
 
-  /** Full-row streaming enrichment (r10): [[enrichStream]] is the typed
-    * GameLite form; the streaming CORPUS pipeline (drop-dir →
-    * enrichment → 20-column partitioned publish) needs every column to
-    * survive, so this applies the identical broadcast trie as a pure
-    * per-row map over the full Row (Encoders.row keeps the schema) —
-    * still zero joins, zero state, any output mode. Semantics are
-    * bit-identical to batch [[enrichTrie]] + writeBack: only
-    * Opening-IS-NULL rows are probed; a match overwrites ECO and fills
-    * Opening, a miss leaves the row untouched.
+  /** Full-row streaming enrichment: the streaming CORPUS pipeline
+    * (drop-dir → enrichment → 20-column partitioned publish) keeps every
+    * column, which [[enrichTrie]] already does — zero joins, zero state,
+    * bit-identical to the batch pipeline's enrichment.
     */
-  def enrichStreamRows(games: DataFrame, openings: DataFrame): DataFrame = {
-    val spark = games.sparkSession
-    val rows = withPly(openings).select("pgn", "opening_ply", "eco", "name")
-      .collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getString(3)))
-    val bc = spark.sparkContext.broadcast(OpeningTrie.build(rows.toIndexedSeq))
-    val schema = games.schema
-    val mtIdx = schema.fieldIndex("clean_movetext")
-    val ecoIdx = schema.fieldIndex("ECO")
-    val opIdx = schema.fieldIndex("Opening")
-    games.mapPartitions { it =>
-      val t = bc.value
-      it.map { r =>
-        if (!r.isNullAt(opIdx)) r
-        else t.longestMatch(r.getString(mtIdx)) match {
-          case Some((eco, name)) =>
-            val vs = r.toSeq.toArray
-            vs(ecoIdx) = eco
-            vs(opIdx) = name
-            org.apache.spark.sql.Row.fromSeq(vs.toIndexedSeq)
-          case None => r
-        }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
-  }
+  def enrichStreamRows(games: DataFrame, openings: DataFrame): DataFrame =
+    enrichTrie(games, openings)
 
   /** J2 rewrite: no in-place UPDATE on immutable storage — left-join the
     * matched (game_id → eco,name) back and coalesce (reference:

@@ -3,9 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** The shared Hive-partitioned parquet sink tail (r9) — one place owning
-  * the layout discipline both publishers (ChessExport.publish, the
-  * CorpusBuild corpus write) previously hand-rolled with a bare
-  * `repartition(partCols)`:
+  * the layout discipline of every publisher (ChessExport's one-shot and
+  * per-source publishes, the streaming publisher, the CorpusBuild corpus
+  * write) instead of a bare `repartition(partCols)` each:
   *
   *  - **REBALANCE hint on the partition columns** instead of a plain
   *    repartition: same one-task-per-cell → one-file-per-cell layout in
@@ -44,17 +44,23 @@ object PartitionedSink {
     * streaming foreachBatch publishers pass Append — per-micro-batch
     * dynamic overwrite would WIPE a cell's earlier batches whenever two
     * micro-batches touch the same Hive cell (r10 streaming E2E gate).
+    *
+    * Overwrite is static unless `dynamicOverwrite`, whatever the session's
+    * `spark.sql.sources.partitionOverwriteMode`: a static overwrite
+    * replaces all of `outDir`, so a cell absent from `df` does not survive
+    * (the per-source publish relies on it); a dynamic one replaces only
+    * the cells present in `df`.
     */
   def write(df: DataFrame, partCols: Seq[String], outDir: String,
       maxRecordsPerFile: Long = MaxRecordsPerFile,
       dynamicOverwrite: Boolean = false,
       mode: SaveMode = SaveMode.Overwrite): Unit = {
     require(partCols.nonEmpty, "partitioned sink needs partition columns")
-    val w = df.hint("rebalance", partCols: _*)
+    df.hint("rebalance", partCols: _*)
       .write
       .mode(mode)
       .option("maxRecordsPerFile", maxRecordsPerFile)
-    (if (dynamicOverwrite) w.option("partitionOverwriteMode", "dynamic") else w)
+      .option("partitionOverwriteMode", if (dynamicOverwrite) "dynamic" else "static")
       .partitionBy(partCols: _*)
       .parquet(outDir)
   }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
@@ -10,14 +10,21 @@ import graft.functions.chess
 import graft.ops.{ChessExport, OpeningEnrichment}
 
 /** The whole-pipeline driver — Spark-native analog of the reference's DVC DAG
-  * (SURVEY.md §3 E1-E3): per source `ingest → normalize → enrich`, then
-  * fan-in `union → project → partitioned publish`.
+  * (SURVEY.md §3 E1-E3): per source `ingest → normalize → enrich → project
+  * → partitioned publish` into that source's `DataSource=<key>` subtree;
+  * the published tree is the union of the subtrees.
   *
-  * Incrementality (the DVC content-hash analog, reference: dvc.lock): each
-  * source's enriched staging output carries a manifest recording a hash of
-  * the input file list (path, size, mtime). When the manifest matches, the
-  * stage is skipped and the staged parquet reused — same skip granularity as
-  * the reference (per source), without re-reading input bytes.
+  * Incrementality (the DVC content-hash analog, reference: dvc.lock)
+  * reaches the publish: each source's enriched staging output carries a
+  * manifest recording a hash of the input file list (path, size, mtime)
+  * and of the openings dimension. When it matches, the stage is skipped and
+  * the staged parquet reused — same skip granularity as the reference (per
+  * source), without re-reading input bytes. The publish manifest holds the
+  * same hash per published source; only a source whose hash differs is
+  * republished, so an incremental run reads and writes that source's cells
+  * alone. Subtrees of sources no longer listed are deleted, so the output
+  * holds exactly the current sources (the reference's clean-output
+  * contract, export-to-parquet.ts:51-56).
   */
 object ChessPipeline {
 
@@ -69,7 +76,9 @@ object ChessPipeline {
     }
 
   /** Full run. `stagingDir` holds per-source enriched parquet + manifests;
-    * `outDir` gets the partitioned publish.
+    * `outDir` gets the partitioned publish, one `DataSource=<key>` subtree
+    * per source, and the publish manifest `outDir/_graft_manifest` with one
+    * `key=<source manifest>` line per published source.
     */
   def run(
       spark: SparkSession,
@@ -77,7 +86,8 @@ object ChessPipeline {
       openings: DataFrame,
       stagingDir: String,
       outDir: String): Unit = {
-    val sorted = sources.sortBy(_.key) // deterministic fan-in order (W2/J3)
+    require(sources.nonEmpty, "no sources to export")
+    val sorted = sources.sortBy(_.key) // deterministic report order (W2/J3)
     // the openings dimension is a dependency of every enrich stage (the
     // reference's DVC DAG tracks it the same way, dvc.yaml:38-50): fold its
     // content fingerprint into each manifest so an updated dimension
@@ -85,66 +95,72 @@ object ChessPipeline {
     val openingsFp = openingsFingerprint(openings)
     val manifests = sorted.map { src =>
       src.key -> (inputManifest(src.pgnDir) + ":" + openingsFp)
-    }.toMap
-    // stage sources in a bounded-concurrency window; each closure runs
-    // independent Spark jobs (the scheduler interleaves their tasks).
-    // Validation markdown is RETURNED and printed in source order below —
-    // concurrent stages must not interleave their report lines.
+    }
+    // a source is republished when its publish-manifest line differs (a
+    // manifest from before per-source lines parses as all sources dirty)
+    val published = readPublishManifest(outDir)
+    val (clean, dirty) = manifests.partition { case (k, m) => published.get(k).contains(m) }
+    val dirtyKeys = dirty.map(_._1).toSet
+    // crash safety: the dirty sources' lines go BEFORE any subtree is
+    // touched, so a publish that dies midway leaves its source dirty
+    if (dirty.nonEmpty) writePublishManifest(outDir, clean)
+    // stage, then publish, each source in a bounded-concurrency window;
+    // each closure runs independent Spark jobs (the scheduler interleaves
+    // their tasks). Validation markdown is RETURNED and printed in source
+    // order below — concurrent stages must not interleave their report lines.
     import java.util.concurrent.Executors
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val pool = Executors.newFixedThreadPool(
       math.max(1, math.min(sourceConcurrency(spark), sorted.size)))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val reports = sorted.map { src =>
+    val reports = sorted.zip(manifests).map { case (src, (_, manifest)) =>
       Future {
         val stage = s"$stagingDir/${src.key}"
-        if (readManifest(stage).contains(manifests(src.key))) {
-          s"[pipeline] skip ${src.key} (manifest match)"
-        } else {
-          ingestAndEnrich(spark, src, openings)
-            .write.mode(SaveMode.Overwrite).parquet(stage)
-          writeManifest(stage, manifests(src.key))
-          // validation tables (S10): same three statements the reference
-          // renders through `duckdb -markdown` at read-pgn.ts:54-56 —
-          // total count, parse-error count, and the parse-error rows
-          val staged = spark.read.parquet(stage)
-          val bad = staged.filter(col("parse_error").isNotNull)
-          Seq(
-            s"[pipeline] ${src.key}:",
-            Markdown.render(staged.agg(count(lit(1)).as("games"))),
-            Markdown.render(bad.agg(count(lit(1)).as("parse_errors"))),
-            Markdown.render(
-              bad.select(col("game_id"), col("Event"), col("parse_error")),
-              maxRows = 20)
-          ).mkString("\n")
-        }
+        lazy val staged = spark.read.parquet(stage)
+        val report =
+          if (readManifest(stage).contains(manifest)) {
+            s"[pipeline] skip ${src.key} (manifest match)"
+          } else {
+            ingestAndEnrich(spark, src, openings)
+              .write.mode(SaveMode.Overwrite).parquet(stage)
+            writeManifest(stage, manifest)
+            validation(src.key, staged)
+          }
+        if (dirtyKeys(src.key)) ChessExport.publishSource(staged, src.key, outDir)
+        report
       }
     }
-    try reports.foreach(r => println(Await.result(r, Duration.Inf)))
-    finally pool.shutdown()
-    // publish-level manifest (the reference's DVC skip applies to the
-    // export stage too): when every per-source manifest AND the published
-    // output's own marker match, the fan-in + partitioned write is
-    // skipped entirely — a no-change re-run touches no data files
-    val publishFp = {
-      val md = MessageDigest.getInstance("SHA-256")
-      sorted.foreach(s =>
-        md.update(s"${s.key}=${manifests(s.key)}\n".getBytes("UTF-8")))
-      md.digest().map("%02x".format(_)).mkString
-    }
-    if (readManifest(outDir).contains(publishFp)) {
+    // every window slot finishes before a failure surfaces: no publish may
+    // still be writing when the caller sees the run end
+    val results = reports.map(r => scala.util.Try(Await.result(r, Duration.Inf)))
+    pool.shutdown()
+    results.foreach(r => println(r.get))
+    val dropped = ChessExport.dropOtherSources(outDir, sorted.map(_.key))
+    if (dirty.isEmpty && dropped.isEmpty) {
       println(s"[pipeline] skip publish (manifest match)")
     } else {
-      val dfs = sorted.map(s => spark.read.parquet(s"$stagingDir/${s.key}"))
-      ChessExport.publish(dfs, outDir)
-      writeManifest(outDir, publishFp)
+      writePublishManifest(outDir, manifests)
       // combined-count validation (export-to-parquet.ts:102-104)
       println("[pipeline] published:")
       println(Markdown.render(
         spark.read.parquet(outDir).agg(count(lit(1)).as("games"))))
     }
     println(s"[pipeline] → $outDir")
+  }
+
+  /** Stage-end validation tables (S10): the three statements the reference
+    * renders through `duckdb -markdown` at read-pgn.ts:54-56 — total count,
+    * parse-error count, and up to 20 parse-error rows. Both counts come
+    * from one aggregate.
+    */
+  private def validation(key: String, staged: DataFrame): String = {
+    val Seq(games, parseErrors) = Markdown.renderColumns(staged.agg(
+      count(lit(1)).as("games"), count(col("parse_error")).as("parse_errors")))
+    val bad = staged.filter(col("parse_error").isNotNull)
+      .select(col("game_id"), col("Event"), col("parse_error"))
+    Seq(s"[pipeline] $key:", games, parseErrors, Markdown.render(bad, maxRows = 20))
+      .mkString("\n")
   }
 
   // --- manifest (DVC-hash analog) ---
@@ -185,6 +201,24 @@ object ChessPipeline {
 
   private def writeManifest(stage: String, m: String): Unit =
     Files.writeString(manifestPath(stage), m)
+
+  /** Publish manifest lines `key=<source manifest>`; a line without `=`
+    * (the former single fan-in hash) names no source. */
+  private def readPublishManifest(outDir: String): Map[String, String] =
+    readManifest(outDir).toSeq.flatMap(_.split("\n")).flatMap { line =>
+      val i = line.lastIndexOf('=')
+      if (i < 0) None else Some(line.substring(0, i) -> line.substring(i + 1))
+    }.toMap
+
+  /** Replaces the publish manifest atomically (temp file + move), so a
+    * crash leaves the old or the new manifest, never a torn one. */
+  private def writePublishManifest(outDir: String, lines: Seq[(String, String)]): Unit = {
+    val p = manifestPath(outDir)
+    Files.createDirectories(p.getParent)
+    val tmp = Files.writeString(p.resolveSibling("_graft_manifest.tmp"),
+      lines.map { case (k, m) => s"$k=$m" }.mkString("\n"))
+    Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+  }
 }
 
 /** CLI: `runMain graft.pipeline.ChessPipelineMain <inRoot> <openingsUri> <stagingDir> <outDir>`

@@ -1,7 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.types.NumericType
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.{NumericType, StructField}
 
 /** Markdown table rendering for pipeline validation output — S10 parity with
   * the reference, which prints its stage-end validation queries through
@@ -18,14 +18,36 @@ import org.apache.spark.sql.types.NumericType
 object Markdown {
 
   def render(df: DataFrame, maxRows: Int = 100): String = {
-    val cols = df.columns
-    val rightAlign = df.schema.fields.map(_.dataType.isInstanceOf[NumericType])
+    val (rows, overflow) = collectCapped(df, maxRows)
+    table(df.schema.fields.toIndexedSeq, rows.map(r => df.columns.indices.map(cell(r, _))),
+      overflow)
+  }
+
+  /** Each column of `df` as its own one-column table, from ONE collect: a
+    * summary aggregate computing N statistics prints N tables for the
+    * price of one job (each table is what [[render]] prints for that
+    * column alone).
+    */
+  def renderColumns(df: DataFrame): Seq[String] = {
+    val (rows, overflow) = collectCapped(df, 100)
+    df.schema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
+      table(IndexedSeq(f), rows.map(r => IndexedSeq(cell(r, i))), overflow)
+    }
+  }
+
+  private def collectCapped(df: DataFrame, maxRows: Int): (Seq[Row], Boolean) = {
     val collected = df.limit(maxRows + 1).collect()
-    val overflow = collected.length > maxRows
-    val cells = collected.take(maxRows).map(r =>
-      cols.indices.map(i => if (r.isNullAt(i)) "NULL" else r.get(i).toString).toArray)
+    (collected.take(maxRows).toSeq, collected.length > maxRows)
+  }
+
+  private def cell(r: Row, i: Int): String = if (r.isNullAt(i)) "NULL" else r.get(i).toString
+
+  private def table(fields: IndexedSeq[StructField], cells: Seq[IndexedSeq[String]],
+      overflow: Boolean): String = {
+    val cols = fields.map(_.name)
+    val rightAlign = fields.map(_.dataType.isInstanceOf[NumericType])
     val widths = cols.indices.map(i =>
-      math.max(cols(i).length, (3 +: cells.map(_(i).length).toSeq).max)).toArray
+      math.max(cols(i).length, (3 +: cells.map(_(i).length)).max))
 
     def pad(s: String, i: Int): String =
       if (rightAlign(i)) (" " * (widths(i) - s.length)) + s
@@ -38,8 +60,8 @@ object Markdown {
       if (rightAlign(i)) ("-" * (widths(i) + 1)) + ":" else "-" * (widths(i) + 2)
     }.mkString("|", "|", "|")
 
-    val body = cells.map(c => row(c.toIndexedSeq))
+    val body = cells.map(row)
     val tail = if (overflow) Seq(row(cols.indices.map(i => if (i == 0) "..." else ""))) else Nil
-    (Seq(row(cols.toIndexedSeq), sep) ++ body ++ tail).mkString("\n")
+    (Seq(row(cols), sep) ++ body ++ tail).mkString("\n")
   }
 }

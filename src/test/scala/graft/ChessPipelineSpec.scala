@@ -146,6 +146,9 @@ class ChessPipelineSpec extends AnyFunSuite with SparkTestBase {
     val many = spark.range(10).toDF("id")
     val capped = graft.pipeline.Markdown.render(many, maxRows = 4)
     assert(capped.split("\n").length == 7 && capped.contains("..."), capped)
+    // one collect, one table per column: each as render prints it alone
+    assert(graft.pipeline.Markdown.renderColumns(df) ==
+      df.columns.toSeq.map(c => graft.pipeline.Markdown.render(df.select(c))))
   }
 
   test("manifest skip: second run reuses staging") {
@@ -160,5 +163,146 @@ class ChessPipelineSpec extends AnyFunSuite with SparkTestBase {
     // manifest untouched → stage skipped
     assert(Files.getLastModifiedTime(
       root.resolve("staging2/src_a/_graft_manifest")) == mtime)
+  }
+
+  // --- per-source publish ---
+
+  private lazy val openings = spark.read.parquet(root.resolve("openings").toString)
+
+  /** Input directory of source `key` (Hadoop paths take no `:`). */
+  private def inDir(d: Path, key: String): Path =
+    d.resolve("in/" + key.filter(_.isLetterOrDigit))
+
+  /** A fresh temp root with one `games.pgn` input per (key, content). */
+  private def inputs(files: (String, String)*): Path = {
+    val d = Files.createTempDirectory("chess_pub")
+    files.foreach { case (k, text) =>
+      Files.writeString(Files.createDirectories(inDir(d, k)).resolve("games.pgn"), text)
+    }
+    d
+  }
+
+  private def runPipe(d: Path, keys: String*): Unit =
+    ChessPipeline.run(spark,
+      keys.map(k => ChessPipeline.Source(k, inDir(d, k).toString)),
+      openings, d.resolve("staging").toString, d.resolve("out").toString)
+
+  private def published(d: Path) = spark.read.parquet(d.resolve("out").toString)
+
+  /** Data files under `out` (no `_`/`.` component) → mtime. */
+  private def dataFiles(d: Path): Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    val out = d.resolve("out")
+    val s = Files.walk(out)
+    try s.iterator().asScala.filter { p =>
+      Files.isRegularFile(p) && out.relativize(p).iterator().asScala
+        .forall(c => !c.toString.startsWith("_") && !c.toString.startsWith("."))
+    }.map(p => out.relativize(p).toString -> Files.getLastModifiedTime(p).toMillis).toMap
+    finally s.close()
+  }
+
+  /** What the reference's read-pgn.ts:54-56 prints through `duckdb -markdown`
+    * for a source of one good and one broken game. */
+  private val ValidationBlock =
+    """[pipeline] src_v:
+      || games |
+      ||------:|
+      ||     2 |
+      || parse_errors |
+      ||-------------:|
+      ||            1 |
+      || game_id | Event  | parse_error          |
+      ||--------:|--------|----------------------|
+      ||     188 | Broken | game has no movetext |
+      |""".stripMargin
+
+  private val gameA = pgn("A1", "2020.01.15", "1. e4 e5 2. Nf3 Nc6 3. Bb5 a6")
+  private val gameB = pgn("B1", "2021.03.10", "1. d4 d5 2. c4 e6")
+
+  test("S9: a source dropped from the source list leaves the published tree") {
+    val d = inputs("src_a" -> gameA, "src_b" -> gameB)
+    runPipe(d, "src_a", "src_b")
+    assert(published(d).count() == 2)
+    runPipe(d, "src_a")
+    assert(!Files.exists(d.resolve("out/DataSource=src_b")))
+    assert(published(d).select("White").as[String].collect().toSeq == Seq("A1"))
+  }
+
+  test("S9: a month missing from a restaged source's new input loses its cell") {
+    val d = inputs("src_a" -> (gameA + "\n" + pgn("A2", "2020.02.20", "1. d4 d5")))
+    runPipe(d, "src_a")
+    assert(Files.exists(d.resolve("out/DataSource=src_a/year=2020/month=02")))
+    Files.writeString(inDir(d, "src_a").resolve("games.pgn"), gameA)
+    runPipe(d, "src_a")
+    assert(!Files.exists(d.resolve("out/DataSource=src_a/year=2020/month=02")))
+    assert(published(d).select("White").as[String].collect().toSeq == Seq("A1"))
+  }
+
+  test("incremental run: only the restaged source's cells are rewritten") {
+    val d = inputs("src_a" -> gameA, "src_b" -> gameB)
+    runPipe(d, "src_a", "src_b")
+    val before = dataFiles(d)
+    Files.writeString(inDir(d, "src_b").resolve("new.pgn"),
+      pgn("B2", "2021.04.01", "1. e4 e5 2. Nf3"))
+    runPipe(d, "src_a", "src_b")
+    val after = dataFiles(d)
+    val (aBefore, bBefore) = before.partition(_._1.startsWith("DataSource=src_a/"))
+    val (aAfter, bAfter) = after.partition(_._1.startsWith("DataSource=src_a/"))
+    assert(aBefore.nonEmpty && aAfter == aBefore) // same files, same mtimes
+    // src_b's subtree is a fresh write: no file of the old one survives
+    assert(bAfter.nonEmpty && bAfter.keySet.intersect(bBefore.keySet).isEmpty)
+    assert(bAfter.keys.exists(_.contains("year=2021/month=04")))
+    assert(published(d).count() == 3)
+  }
+
+  test("a publish that fails midway leaves its source dirty for the next run") {
+    val d = inputs("src_a" -> gameA, "src_b" -> gameB)
+    runPipe(d, "src_a", "src_b")
+    val landed = Files.writeString(inDir(d, "src_b").resolve("new.pgn"),
+      pgn("B2", "2021.04.01", "1. e4 e5 2. Nf3"))
+    // src_b's subtree is cleared for the static overwrite, then the write
+    // cannot make a directory in it
+    val blockKeys = Seq("fs.file.impl" -> classOf[BlockingLocalFs].getName,
+      "fs.file.impl.disable.cache" -> "true", "graft.test.blockedDir" -> "DataSource=src_b")
+    blockKeys.foreach { case (k, v) => spark.conf.set(k, v) }
+    val e = try intercept[Exception](runPipe(d, "src_a", "src_b"))
+    finally blockKeys.foreach { case (k, _) => spark.conf.unset(k) }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("blocked")), e)
+    assert(!Files.exists(d.resolve("out/DataSource=src_b/year=2021/month=03")))
+    // the input returns to the state last published in full: only the
+    // dropped manifest line still marks src_b as unpublished
+    Files.delete(landed)
+    runPipe(d, "src_a", "src_b")
+    assert(published(d).select("White").as[String].collect().sorted.toSeq == Seq("A1", "B1"))
+    assert(Files.exists(d.resolve("out/DataSource=src_b/year=2021/month=03")))
+  }
+
+  test("a source key needing path escaping reads back exactly") {
+    val d = inputs("lum:2019" -> gameA, "src b" -> gameB)
+    runPipe(d, "lum:2019", "src b")
+    val keys = published(d).select("DataSource", "White").as[(String, String)]
+      .collect().sorted.toSeq
+    assert(keys == Seq(("lum:2019", "A1"), ("src b", "B1")))
+    assert(Files.exists(d.resolve("out/DataSource=lum%3A2019/year=2020/month=01")))
+  }
+
+  test("a source with no game past the date filter publishes beside a normal one") {
+    val d = inputs("src_a" -> gameA, "src_old" -> pgn("Z1", "????.??.??", "1. e4 c5"))
+    runPipe(d, "src_a", "src_old")
+    val out = published(d)
+    assert(out.columns.length == 20)
+    assert(out.select("DataSource", "White").as[(String, String)].collect().toSeq ==
+      Seq(("src_a", "A1")))
+  }
+
+  test("stage validation prints the reference's three markdown tables") {
+    val d = inputs("src_v" -> (gameA + "\n" + "[Event \"Broken\"]\n[Result \"*\"]\n\n"))
+    val buf = new java.io.ByteArrayOutputStream()
+    Console.withOut(buf)(runPipe(d, "src_v"))
+    val printed = buf.toString("UTF-8")
+    val block = printed.substring(printed.indexOf("[pipeline] src_v:"),
+      printed.indexOf("[pipeline] published:"))
+    assert(block == ValidationBlock, printed)
   }
 }
